@@ -1,46 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // Respect the advisory partition size when coalescing post-shuffle
-      // partitions instead of maximizing parallelism — Spark's own
-      // recommended production setting (the `true` default is legacy
-      // parity). Measured −12% on the sf0.1 suite: the ~30 sub-second
-      // queries stop paying 32-task waves per trivial shuffle, and the
-      // shuffle-heavy dedup family (q22/q23/q36/q39/q46) gains the most.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Local-mode shuffle-writer tuning, measured at sf0.1 (r15):
-      // with <=200 reducers Spark picks the bypass-merge writer,
-      // which opens one spill file PER REDUCER PER MAP TASK — at 32
-      // reducers that is ~4 ms of open/close per file and a trivial
-      // 32-task map stage pays ~130 ms/task of pure writer overhead
-      // (TaskCostProbe: 298 ms -> 100 ms wall for a 100k-row
-      // repartition+agg). Forcing the sort-based writer (one output
-      // file per map task at any reducer count — the same path every
-      // >200-partition cluster job takes) plus small sorter pages
-      // (64 MB default pages are zeroed per task; tiny local tasks
-      // never fill them) removes it. Cluster deployments with big
-      // per-task partitions should leave these at default.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.buffer.pageSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays session conf
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';')).filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(s"local[$cpus]", cpus.toInt)
     // Warmup: absorb session/codegen/JIT/parquet-footer costs outside
     // timings by running every query shape once at the smallest SF —
     // the measured numbers then reflect the workload, not Janino

@@ -28,6 +28,55 @@ object Tables {
     spark
   }
 
+  /** THE session factory every graft main runs under, so `Verify`
+    * checks results under the same conf `Bench` times: graft's
+    * extensions, a UTC session, AQE (`SPARK_GRAFT_AQE`, default on) and
+    * the local-mode shuffle tuning below, then the
+    * `SPARK_GRAFT_EXTRA_CONF="k=v;k=v"` overlay and [[prepare]]. */
+  def session(master: String, shufflePartitions: Int,
+              warehouseDir: Option[String] = None,
+              appName: String = "graft"): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(master)
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toLong)
+      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // Respect the advisory partition size when coalescing post-shuffle
+      // partitions instead of maximizing parallelism — Spark's own
+      // recommended production setting (the `true` default is legacy
+      // parity). Measured −12% on the sf0.1 suite: the ~30 sub-second
+      // queries stop paying 32-task waves per trivial shuffle, and the
+      // shuffle-heavy dedup family (q22/q23/q36/q39/q46) gains the most.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // Local-mode shuffle-writer tuning, measured at sf0.1 (r15):
+      // with <=200 reducers Spark picks the bypass-merge writer,
+      // which opens one spill file PER REDUCER PER MAP TASK — at 32
+      // reducers that is ~4 ms of open/close per file and a trivial
+      // 32-task map stage pays ~130 ms/task of pure writer overhead
+      // (298 ms -> 100 ms wall for a 100k-row repartition+agg).
+      // Forcing the sort-based writer (one output file per map task at
+      // any reducer count — the same path every >200-partition cluster
+      // job takes) plus small sorter pages (64 MB default pages are
+      // zeroed per task; tiny local tasks never fill them) removes it.
+      // Cluster deployments with big per-task partitions should leave
+      // these at default.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
+      .config("spark.buffer.pageSize", "1m")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
+    warehouseDir.foreach(builder.config("spark.sql.warehouse.dir", _))
+    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays session conf
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';')).filter(_.contains('='))
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        builder.config(k, v)
+      }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    prepare(spark)
+  }
+
   /** Cast every TIMESTAMP_NTZ column to TIMESTAMP (session TZ must be
     * UTC for value-exactness — `prepare` guarantees it for all graft
     * entry points). Applied to every table, not just events: any column

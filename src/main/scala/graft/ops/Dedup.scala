@@ -751,12 +751,11 @@ object Dedup {
     * per-cluster op relies on. Output: input + (cluster_id, keep). */
   def resolveClustersByQuality(docs: DataFrame, idCol: String,
                                qualityCol: String, pairs: DataFrame,
-                               maxIterations: Int = 20,
-                               algorithm: String = "star"): DataFrame = {
+                               maxIterations: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col(qualityCol).desc, col(idCol))
-    resolveClusters(docs, idCol, pairs, maxIterations, algorithm)
+    resolveClusters(docs, idCol, pairs, maxIterations)
       .withColumn("keep", row_number().over(w) === 1)
   }
 
@@ -1125,40 +1124,27 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair graph —
     * the closure step that turns near-dup PAIRS (q22/q23/q24/q26) into
-    * dedup CLUSTERS. Three execution paths, picked by graph size and
-    * `algorithm`:
+    * dedup CLUSTERS. Two execution paths, picked by the observed edge
+    * count:
     *
     *  - ≤ `driverEdgeLimit` edges (integral ids): driver union-find —
     *    near-dup graphs are usually tiny relative to their corpus, and
     *    every distributed round costs ~1 s of pure scheduler latency.
-    *  - above the limit, `algorithm = "star"` (default): large-star/
-    *    small-star alternation ([[connectedComponentsStar]]) — the
-    *    shape-ROBUST choice. The one-config-per-JVM probe matrix
-    *    (NOTES_r07, 22.5M/24M edges) has star within 11% of the best
-    *    config on shallow LSH graphs and 3× the best propagation
-    *    config on adversarial chains (O(log n) = 6 rounds vs 32) — and
-    *    a caller with millions of edges usually cannot KNOW the shape.
-    *  - `algorithm = "frontier"`: changed-labels-only min-label
-    *    propagation — converges in graph-DIAMETER rounds; round 1 is
-    *    one full edge⋈label shuffle, later rounds shuffle only edges
-    *    touching the shrinking frontier. Opt-in for graphs KNOWN to be
-    *    shallow at moderate scale, where propagation's 3 cheap stages
-    *    per round beat star's rewiring cost (measured 3× on the 600 k
-    *    LSH probe graph — a scale the driver fast path absorbs anyway).
+    *  - above the limit, or with non-integral ids: large-star/small-star
+    *    alternation ([[connectedComponentsStar]]) — the shape-ROBUST
+    *    choice. The one-config-per-JVM probe matrix (NOTES_r07,
+    *    22.5M/24M edges) has star within 11% of the best configuration
+    *    on shallow LSH graphs and 3× faster than min-label propagation
+    *    on adversarial chains (O(log n) = 6 rounds vs 32) — and a
+    *    caller with millions of edges usually cannot KNOW the shape.
     *
-    * All three label identically (OpsSpec pins the equivalence; the
-    * probe matrix pins it at 22.5M+ edges via (nodes, clusters,
-    * Σlabel) agreement).
+    * Both label identically (DedupSpec pins the equivalence).
     *
     * Returns (id, cluster) where cluster = min id of the component.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                           maxIterations: Int = 20,
-                          driverEdgeLimit: Long = 1000000L,
-                          checkpointInterval: Int = 1,
-                          algorithm: String = "star"): DataFrame = {
-    require(algorithm == "star" || algorithm == "frontier",
-      s"unknown CC algorithm: $algorithm (expected star | frontier)")
+                          driverEdgeLimit: Long = 1000000L): DataFrame = {
     // Small-graph fast path: near-dup graphs are usually TINY relative
     // to their corpus (dozens to thousands of edges for millions of
     // docs), and every distributed round costs fixed scheduler +
@@ -1180,137 +1166,21 @@ object Dedup {
       case _ => false
     })
     val fastEligible = driverEdgeLimit > 0 && driverEdgeLimit < Int.MaxValue && integralIds
-    val src = if (fastEligible)
-      pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else pairs
-    if (fastEligible) {
-      import src.sparkSession.implicits._
-      val probe = src.select(col(idA).cast("long"), col(idB).cast("long"))
-        .as[(Long, Long)].limit(driverEdgeLimit.toInt + 1).collect()
-      if (probe.length <= driverEdgeLimit) {
-        src.unpersist(blocking = false)
-        return connectedComponentsLocal(pairs.sparkSession, probe)
-      }
+    if (!fastEligible) return connectedComponentsStar(pairs, idA, idB, maxIterations)
+    val src = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import src.sparkSession.implicits._
+    val probe = src.select(col(idA).cast("long"), col(idB).cast("long"))
+      .as[(Long, Long)].limit(driverEdgeLimit.toInt + 1).collect()
+    if (probe.length <= driverEdgeLimit) {
+      src.unpersist(blocking = false)
+      return connectedComponentsLocal(pairs.sparkSession, probe)
     }
-    if (algorithm == "star") {
-      // Star materializes both its derived frames from the persisted
-      // src before returning, so the cache can drop immediately.
-      val out = connectedComponentsStar(src, idA, idB, maxIterations)
-      if (fastEligible) src.unpersist(blocking = false)
-      return out
-    }
-    // CO-PARTITION the loop invariants ONCE: `localCheckpoint` preserves
-    // the physical plan's outputPartitioning in the LogicalRDD it leaves
-    // behind, so an edge frame hash-partitioned by dst and a state frame
-    // hash-partitioned by id make every round's big-side joins
-    // exchange-free — only the (shrinking) message stream shuffles.
-    // Without this, EnsureRequirements re-shuffles the FULL edge frame
-    // every round (measured: a 178-row frontier round still cost 67 s at
-    // 23M edges — the whole per-round floor was that redundant shuffle).
-    // The partition count is pinned explicitly: AQE must not coalesce
-    // one side of a co-partitioned pair.
-    val p = src.sparkSession.sessionState.conf.numShufflePartitions
-    val edges = src.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(src.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .repartition(p, col("dst"))
-      .localCheckpoint() // eager — src is materialized into the edge frame here
-    if (fastEligible) src.unpersist(blocking = false)
-    // FRONTIER propagation (the Pregel CC shape): round r only sends
-    // labels that CHANGED in round r-1 — after the first round the
-    // edge⋈frontier join shrinks with the frontier instead of re-
-    // shuffling every label past every edge (full relabel is O(E) per
-    // round; frontier rounds are O(frontier-adjacent edges), and near-
-    // dup frontiers collapse after round 1). State is one frame
-    // (id, cluster, chg): the frontier is a filter of it, so each round
-    // materializes ONCE. `checkpointInterval` > 1 batches that many
-    // rounds into one eager materialization — intermediates persist
-    // (diamond reuse: each round's state feeds both the next round's
-    // messages and its label join) and only the span boundary
-    // localCheckpoints + runs the convergence count, trading
-    // potentially one overshot round for span-1 fewer checkpoint
-    // materializations and scheduler barriers per span. The span is
-    // CLAMPED ≤ 4: caching dedupes execution of the per-round diamond,
-    // but Catalyst walks logical plans as TREES, so analysis cost is
-    // 2^span small-tree traversals — fine at 4, an OOM at 16.
-    var state = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster"), lit(true).as("chg"))
-      .repartition(p, col("id"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = edges.isEmpty
-    // GRAFT_CC_DEBUG=1: per-span wall time + frontier size to stdout —
-    // probe instrumentation on the REAL code path (CCProbe sets it); the
-    // only behavioral delta is count() instead of isEmpty() for the
-    // convergence check, identical in result.
-    val debug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    while (!converged && iter < maxIterations) {
-      val spanT0 = System.nanoTime()
-      val span = math.min(math.min(math.max(checkpointInterval, 1), 4),
-        maxIterations - iter)
-      var s = state
-      val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-      for (_ <- 0 until span) {
-        // Both joins are exchange-free: the frontier inherits the state
-        // frame's id-partitioning through the id→dst alias (matching the
-        // edge frame's dst-partitioning), and msgs comes out of its
-        // groupBy hash-partitioned by id (matching state). SHUFFLE_HASH
-        // hints pin the hash-join strategy so the static big sides are
-        // streamed, not sorted, every round — the build side is one
-        // partition's share of the frontier (Pregel's standard memory
-        // assumption), never the edge frame.
-        val msgs = edges
-          .join(s.filter(col("chg"))
-            .select(col("id").as("dst"), col("cluster").as("nc"))
-            .hint("shuffle_hash"), Seq("dst"))
-          .groupBy(col("src").as("id"))
-          .agg(min(col("nc")).as("nmin"))
-        s = s.select(col("id"), col("cluster"))
-          .join(msgs.hint("shuffle_hash"), Seq("id"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("nmin"), col("cluster"))).as("cluster"),
-            coalesce(col("nmin") < col("cluster"), lit(false)).as("chg"))
-        if (persisted.length < span - 1) { // last frame checkpoints below
-          s = s.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          persisted += s
-        }
-      }
-      val next = s.localCheckpoint() // eager: the whole span evaluates once
-      persisted.foreach(_.unpersist(blocking = false))
-      // Drop the SUPERSEDED state's checkpoint blocks now, not when the
-      // ContextCleaner eventually notices the frame is unreferenced:
-      // each round strands ~O(nodes) of block-manager storage, and 10+
-      // rounds of stranded frames evict live blocks / stall rounds on
-      // GC (measured: erratic 20-215 s rounds at sub-1k frontiers on a
-      // 23M-edge graph; flat ~10 s rounds with eager release). `next`
-      // is already materialized, so nothing re-reads these blocks.
-      dropCheckpointBlocks(state)
-      state = next
-      iter += span
-      if (debug) {
-        val frontier = state.filter(col("chg")).count()
-        converged = frontier == 0L
-        println(f"[cc] iter=$iter%-3d span=$span frontier=$frontier%,d " +
-          f"span_s=${(System.nanoTime() - spanT0) / 1e9}%.1f")
-      } else converged = state.filter(col("chg")).isEmpty
-    }
-    val out = state.select(col("id"), col("cluster"))
-    // The result depends only on the final state checkpoint — the edge
-    // frame's blocks can go as soon as the loop exits.
-    dropCheckpointBlocks(edges)
+    // Star materializes both its derived frames from the persisted
+    // src before returning, so the cache can drop immediately.
+    val out = connectedComponentsStar(src, idA, idB, maxIterations)
+    src.unpersist(blocking = false)
     out
   }
-
-  /** Eagerly release the block-manager storage behind a
-    * `localCheckpoint`ed frame (its plan leaf is a `LogicalRDD` owning
-    * the cached blocks). A post-checkpoint frame's lineage contains
-    * ONLY its own RDD leaf, so this never touches other live frames. */
-  private def dropCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Driver union-find for edge lists under the collect limit: path
     * compression + union by min keeps the min id as each root, so the
@@ -1363,8 +1233,7 @@ object Dedup {
                      idCol: String = "id", clusterCol: String = "cluster",
                      idA: String = "id_a", idB: String = "id_b",
                      maxIterations: Int = 20,
-                     driverEdgeLimit: Long = 1000000L,
-                     algorithm: String = "star"): DataFrame = {
+                     driverEdgeLimit: Long = 1000000L): DataFrame = {
     val lbl = labels.select(col(idCol).cast("long").as("id"),
       col(clusterCol).cast("long").as("cluster"))
     val (relabeled, touchedClusters) = foldPairsIntoLabels(
@@ -1372,7 +1241,7 @@ object Dedup {
         col(idB).cast("long").as("id_b")),
       ids => lbl.join(ids, Seq("id"), "left_semi"),
       clusters => lbl.join(clusters, Seq("cluster"), "left_semi"),
-      maxIterations, driverEdgeLimit, algorithm)
+      maxIterations, driverEdgeLimit)
     lbl.join(touchedClusters, Seq("cluster"), "left_anti")
       .select(col("id"), col("cluster"))
       .unionByName(relabeled.select(col("id"), col("cluster")))
@@ -1413,8 +1282,7 @@ object Dedup {
                     pairsAmong: DataFrame => DataFrame,
                     idCol: String = "id", clusterCol: String = "cluster",
                     maxIterations: Int = 20,
-                    driverEdgeLimit: Long = 1000000L,
-                    algorithm: String = "star"): DataFrame = {
+                    driverEdgeLimit: Long = 1000000L): DataFrame = {
     val lbl = labels.select(col(idCol).cast("long").as("id"),
       col(clusterCol).cast("long").as("cluster"))
     // a single id column only: reading one column of a wider frame
@@ -1430,8 +1298,7 @@ object Dedup {
       .join(rem, Seq("id"), "left_anti")
       .select(col("id")).transform(graft.core.Materialize.frame)
     val relabeled = connectedComponents(pairsAmong(survivors),
-      maxIterations = maxIterations, driverEdgeLimit = driverEdgeLimit,
-      algorithm = algorithm)
+      maxIterations = maxIterations, driverEdgeLimit = driverEdgeLimit)
     // pairless survivors become singletons — self-labeled, not dropped
     val singletons = survivors
       .join(relabeled.select(col("id")), Seq("id"), "left_anti")
@@ -1454,8 +1321,7 @@ object Dedup {
   private[graft] def foldPairsIntoLabels(pairs: DataFrame,
       currentFor: DataFrame => DataFrame,
       membersOf: DataFrame => DataFrame,
-      maxIterations: Int, driverEdgeLimit: Long,
-      algorithm: String): (DataFrame, DataFrame) = {
+      maxIterations: Int, driverEdgeLimit: Long): (DataFrame, DataFrame) = {
     val touchedIds = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
     val touchedClusters = currentFor(touchedIds)
@@ -1463,8 +1329,7 @@ object Dedup {
     val memberEdges = membersOf(touchedClusters)
       .select(col("id").as("id_a"), col("cluster").as("id_b"))
     val relabeled = connectedComponents(pairs.unionByName(memberEdges),
-      maxIterations = maxIterations, driverEdgeLimit = driverEdgeLimit,
-      algorithm = algorithm)
+      maxIterations = maxIterations, driverEdgeLimit = driverEdgeLimit)
     (relabeled, touchedClusters)
   }
 
@@ -1473,14 +1338,12 @@ object Dedup {
     * each round rewires every node's larger neighbors (large-star) and
     * then its smaller neighbors (small-star) to the neighborhood
     * minimum, star-ifying components in O(log n) rounds — vs
-    * graph-DIAMETER rounds for [[connectedComponents]], which
+    * graph-DIAMETER rounds for min-label propagation, which
     * serializes on long chains.
     *
-    * This is [[connectedComponents]]'s default distributed path (see
-    * its scaladoc for the probe-matrix numbers behind that choice);
-    * for shallow near-dup graphs at moderate scale plain propagation's
-    * 3-stage rounds win (measured 3× on the 600 k LSH probe graph —
-    * `algorithm = "frontier"` there). Each half-step is one
+    * This is [[connectedComponents]]'s distributed path, taken above
+    * the driver union-find's edge limit (see its scaladoc for the
+    * probe-matrix numbers behind that choice). Each half-step is one
     * map-side-combinable groupBy for the neighborhood minima plus one
     * join back to the edge frame; the edge set SHRINKS as components
     * collapse into stars; `localCheckpoint` truncates the iterative
@@ -1508,8 +1371,8 @@ object Dedup {
       .localCheckpoint()
     // every ORIGINAL endpoint: a node whose only pair was a self-loop
     // has no surviving normalized edge but must still be labeled,
-    // exactly as the propagation algorithm labels it — the two
-    // algorithms return the same node set for any input.
+    // exactly as the driver union-find labels it — the two paths
+    // return the same node set for any input.
     val nodes = src.select(col(idA).as("id"))
       .union(src.select(col(idB).as("id")))
       .distinct()
@@ -1559,18 +1422,18 @@ object Dedup {
     var prev = sig(e)
     var iter = 0
     var converged = prev._1 == 0L
-    val debug = sys.env.get("GRAFT_CC_DEBUG").contains("1")
     while (!converged && iter < maxIterations) {
-      val t0 = System.nanoTime()
       val prevE = e
       e = smallStar(largeStar(e)).localCheckpoint()
-      dropCheckpointBlocks(prevE) // superseded round's blocks, eagerly
+      // Drop the superseded round's blocks now, not when the
+      // ContextCleaner eventually notices the frame is unreferenced:
+      // stranded rounds evict live blocks and stall later rounds on GC.
+      // `e` is already materialized, so nothing re-reads them.
+      graft.core.Materialize.release(prevE)
       val now = sig(e)
       converged = now == prev
       prev = now
       iter += 1
-      if (debug) println(f"[cc-star] iter=$iter%-3d edges=${now._1}%,d " +
-        f"round_s=${(System.nanoTime() - t0) / 1e9}%.1f")
     }
     // at the star fixpoint every non-root points straight at its
     // component min; groupBy-min also tolerates a maxIterations cutoff.
@@ -2298,10 +2161,8 @@ object Dedup {
     * This is the operator that actually PRODUCES a deduplicated corpus:
     * `docs.filter(col("keep"))` after any pair-generating detector. */
   def resolveClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-                      maxIterations: Int = 20,
-                      algorithm: String = "star"): DataFrame = {
-    val labels = connectedComponents(pairs, maxIterations = maxIterations,
-        algorithm = algorithm)
+                      maxIterations: Int = 20): DataFrame = {
+    val labels = connectedComponents(pairs, maxIterations = maxIterations)
       .select(col("id").as("__cc_id"), col("cluster").as("__cc_cluster"))
     docs.join(labels, docs(idCol) === labels("__cc_id"), "left")
       .withColumn("cluster_id", coalesce(col("__cc_cluster"), col(idCol)))
@@ -2320,13 +2181,12 @@ object Dedup {
     * ("train" / "val" / "test"). */
   def leakageSafeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
                        trainFrac: Double, valFrac: Double,
-                       maxIterations: Int = 20,
-                       algorithm: String = "star"): DataFrame = {
+                       maxIterations: Int = 20): DataFrame = {
     require(trainFrac > 0 && valFrac >= 0 && trainFrac + valFrac < 1.0,
       "fractions must be positive and leave room for the test split")
     val u = (Sketches.hash60(col("cluster_id")).cast("double") + 1.0) /
       math.pow(2.0, 60)
-    resolveClusters(docs, idCol, pairs, maxIterations, algorithm)
+    resolveClusters(docs, idCol, pairs, maxIterations)
       .withColumn("split",
         when(u < trainFrac, lit("train"))
           .when(u < trainFrac + valFrac, lit("val"))

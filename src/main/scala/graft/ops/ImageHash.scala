@@ -115,8 +115,8 @@ object ImageHash {
     *  - MemoryCacheImageInputStream, NOT ImageIO.createImageInputStream:
     *    the default is a FileCacheImageInputStream that spools every
     *    in-memory payload to a temp file — measured 5-10x slower and
-    *    wildly disk-noise-dependent (DecodeBench A/B: 1.6 s vs 8-17 s
-    *    per 50k single-threaded decodes);
+    *    wildly disk-noise-dependent (A/B: 1.6 s vs 8-17 s per 50k
+    *    single-threaded decodes);
     *  - `setInput(iis, seekForwardOnly = true, ignoreMetadata = true)` —
     *    the exact semantics `ImageIO.read` uses, so corrupt-but-
     *    ignorable metadata segments do not fail payloads that always

@@ -73,7 +73,7 @@ object Multimodal {
   def imageDims(payload: Array[Byte]): Option[(Int, Int)] = {
     // memory-cached stream: ImageIO's default stream cache spools the
     // (already in-memory) payload to a temp FILE per call — measured
-    // 5-10x slower under disk noise (ImageHash.dHash64's DecodeBench)
+    // 5-10x slower under disk noise (see ImageHash.dHash64)
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(payload))
     try {

@@ -72,7 +72,7 @@ private[graft] object TrainingDedup {
     }),
 
     // Near-dup cluster resolution: q23's LSH candidate pairs closed
-    // into connected components (iterative min-label propagation) —
+    // into connected components (Dedup.connectedComponents) —
     // the step that turns pair DETECTION into an actually deduplicated
     // corpus: one survivor (`keep`) per transitive near-dup cluster.
     "q39_dedup_clusters" -> ((s, d) => {

@@ -98,8 +98,7 @@ class LabelStore(spark: SparkSession,
     * member of a touched component plus every new id. Cost bounds by
     * the touched components, never the corpus. */
   def fold(newPairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-           maxIterations: Int = 20, driverEdgeLimit: Long = 1000000L,
-           algorithm: String = "star"): DataFrame = {
+           maxIterations: Int = 20, driverEdgeLimit: Long = 1000000L): DataFrame = {
     // a torn removal leaves layouts that DISAGREE (labels may have
     // increased in one but not the other) — folding over that state
     // can permanently strand a co-member, so refuse until healed
@@ -110,7 +109,7 @@ class LabelStore(spark: SparkSession,
       newPairs.select(col(idA).cast("long").as("id_a"),
         col(idB).cast("long").as("id_b")),
       currentFor, membersOf,
-      maxIterations, driverEdgeLimit, algorithm)._1
+      maxIterations, driverEdgeLimit)._1
   }
 
   /** The full maintenance round: fold, then append. Relabels
@@ -119,10 +118,8 @@ class LabelStore(spark: SparkSession,
     * merges are idempotent and min-per-id reads absorb the duplicate
     * rows. */
   def ingest(newPairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-             maxIterations: Int = 20, driverEdgeLimit: Long = 1000000L,
-             algorithm: String = "star"): DataFrame = {
-    val relabeled = fold(newPairs, idA, idB, maxIterations, driverEdgeLimit,
-        algorithm)
+             maxIterations: Int = 20, driverEdgeLimit: Long = 1000000L): DataFrame = {
+    val relabeled = fold(newPairs, idA, idB, maxIterations, driverEdgeLimit)
       .localCheckpoint(true)
     append(relabeled)
     relabeled
@@ -192,8 +189,7 @@ class LabelStore(spark: SparkSession,
   def removeMembers(removedIds: DataFrame,
                     pairsAmong: DataFrame => DataFrame,
                     maxIterations: Int = 20,
-                    driverEdgeLimit: Long = 1000000L,
-                    algorithm: String = "star"): DataFrame = {
+                    driverEdgeLimit: Long = 1000000L): DataFrame = {
     if (!exists) return emptyLabels
     // a crashed earlier removal left a pending marker — its ids are
     // still (possibly) present in the layouts. UNION them into this
@@ -216,7 +212,7 @@ class LabelStore(spark: SparkSession,
     val current = loadAll().localCheckpoint(true)
     val newLabels = graft.ops.Dedup.removeMembers(current, rem,
         pairsAmong, maxIterations = maxIterations,
-        driverEdgeLimit = driverEdgeLimit, algorithm = algorithm)
+        driverEdgeLimit = driverEdgeLimit)
       .localCheckpoint(true)
     publishRewrite(newLabels)
     spark.sql(s"DROP TABLE IF EXISTS $pendingTable")

@@ -765,7 +765,6 @@ object Streaming {
                              store: graft.sources.LabelStore,
                              emit: DataFrame => Unit,
                              driverEdgeLimit: Long = 1000000L,
-                             algorithm: String = "star",
                              compactRatio: Double = 0.0,
                              compactFloor: Long = 1000000L)
                             (stream: DataFrame): DataStreamWriter[Row] =
@@ -773,7 +772,7 @@ object Streaming {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         emit(store.ingest(batch, idACol, idBCol,
-          driverEdgeLimit = driverEdgeLimit, algorithm = algorithm))
+          driverEdgeLimit = driverEdgeLimit))
         if (compactRatio > 0.0) { store.maybeCompact(compactRatio, compactFloor); () }
       }
 

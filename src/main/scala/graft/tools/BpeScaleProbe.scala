@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Bpe
 
@@ -18,13 +17,7 @@ import graft.ops.Bpe
 object BpeScaleProbe {
   def main(args: Array[String]): Unit = {
     val nTypes = args.headOption.map(_.toInt).getOrElse(1200000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("local[32]", 32)
     import spark.implicits._
     def tm[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

@@ -20,20 +20,9 @@ trait DatasetProvider {
 /** Shared CLI plumbing for the management-command mains. */
 object Commands {
 
-  def session(app: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-      .appName(app)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    spark
-  }
+  def session(app: String): SparkSession =
+    graft.Tables.session(sys.env.getOrElse("GRAFT_MASTER", "local[4]"),
+      sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "4").toInt, appName = app)
 
   /** Resolve a provider: registered label first ([[DataStorages]] —
     * the reference's `apps.get_model(label)` path), then

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
@@ -30,13 +30,7 @@ object IndexProbe {
       f.delete(); ()
     }
     if (wh.exists) rmrf(wh)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.warehouse.dir", wh.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("local[32]", 64, Some(wh.getAbsolutePath))
     import ProbeTiming.{tm, tmMedian}
     // deterministic 25-token doc from a seed; xxhash64 mixing — a
     // linear-congruential token formula folds mod the vocabulary and

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
@@ -22,7 +22,7 @@ import graft.sources.LabelStore
   *      union-find fast path and the forced-distributed star path);
   *   4. A/Bs against the one-shot CC recompute over store ∪ batch the
   *      fold replaces, and checks EXACT equivalence
-  *      (updateClusters(cc(E1), E2) ≡ cc(E1 ∪ E2)) via the CCProbe
+  *      (updateClusters(cc(E1), E2) ≡ cc(E1 ∪ E2)) via the
   *      (count, n_clusters, Σcluster) signature over all rows.
   *
   * Usage (32g driver — the 10M-row checkpointed frames need it):
@@ -36,14 +36,8 @@ object LabelProbe {
     val nPairs = if (args.length > 1) args(1).toLong else 100000L
     require(nPairs * 8 <= nLabels, "pairs must merge existing components")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-labelprobe").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session(s"local[$cpus]", cpus.toInt,
+      Some(java.nio.file.Files.createTempDirectory("graft-labelprobe").toString))
     import ProbeTiming._
 
     def summarize(labels: DataFrame): (Long, Long, Long) = {

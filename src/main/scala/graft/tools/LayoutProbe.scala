@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Relevance, Selection}
 
 /** Layout-family scale probe: drive q89/q90/q93's operators at volumes
   * the bench SFs never reach and print the numbers the 100 TB design
-  * claims rest on. Not part of CI — a manual harness like CCProbe /
-  * StreamProbe. Usage:
+  * claims rest on. Not part of CI — a manual harness like StreamProbe.
+  * Usage:
   *   sbt "runMain graft.tools.LayoutProbe [rows] [sfDir]"
   * (default 100M synthetic rows for shuffle/zorder; inverted index
   * runs over lineitem comments at sfDir volume — ~600k docs at sf0.1.)
@@ -30,16 +29,9 @@ object LayoutProbe {
     val n = args.headOption.map(_.toLong).getOrElse(100000000L)
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (cpus.toInt * 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.prepare(spark)
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt)
+      .getOrElse(cpus.toInt * 4)
+    val spark = graft.Tables.session(s"local[$cpus]", shuffle)
 
     def timed[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.{ImageHash, Multimodal}
@@ -65,13 +65,7 @@ object MediaProbe {
       f.delete(); ()
     }
     if (wh.exists) rmrf(wh)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.warehouse.dir", wh.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("local[32]", 64, Some(wh.getAbsolutePath))
     import ProbeTiming.tmMedian
 
     // ---- 1. header decode at 1M mixed media --------------------------

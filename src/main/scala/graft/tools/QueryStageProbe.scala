@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Generic per-stage budget probe for any registered query (the r15
   * optimization round's measuring stick — guide §1/§7.1 empirical
@@ -18,14 +17,7 @@ object QueryStageProbe {
     val q = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.buffer.pageSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    val spark = graft.Tables.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var verbose = false
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale-curve audit (dev tool, run-once evidence for NOTES): the
   * direct measurement behind the "would this plan survive a 100×
@@ -61,14 +60,7 @@ object ScaleCurveProbe {
       .map(_.split(",").toSeq).getOrElse(DefaultQueries)
     val dirs = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1", sf1Dir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    val spark = graft.Tables.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val registry = graft.SparkEntry.queries
     var failures = List.empty[String]

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Sketches, Sharding, Stats}
 
@@ -18,12 +17,7 @@ import graft.ops.{Sketches, Sharding, Stats}
 object SketchScaleProbe {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toLong).getOrElse(100000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session("local[32]", 64)
     def tm[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[probe] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r

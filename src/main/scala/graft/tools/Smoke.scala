@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.GraftFunctions
 
 /** Runnable smoke entry: drives the public library surface against the
@@ -10,16 +9,7 @@ import graft.functions.GraftFunctions
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.prepare(spark)
+    val spark = graft.Tables.session("local[4]", 4, appName = "graft-smoke")
 
     graft.Tables.load(spark, sfDir, "events").createOrReplaceTempView("events")
     println("== graft_reach over events.props (SQL surface) ==")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -26,18 +26,11 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.Tables.session(s"local[$cpus]", cpus.toInt,
       // fresh warehouse per run: the sprobe_* tables are per-run state,
       // and a stale ./spark-warehouse/sprobe_* directory from an earlier
       // probe fails saveAsTable with LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("sp-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Some(java.nio.file.Files.createTempDirectory("sp-warehouse").toString))
     import spark.implicits._
 
     // 600k events: the sf0.1 events table ×6, each copy's users disjoint

@@ -282,11 +282,6 @@ class DedupSpec extends SparkTestBase {
           df => Dedup.connectedComponents(df), // driver union-find fast path
           // distributed default above the limit = star (via dispatch)
           df => Dedup.connectedComponents(df, driverEdgeLimit = 0),
-          // frontier propagation (opt-in distributed path)
-          df => Dedup.connectedComponents(df, driverEdgeLimit = 0, algorithm = "frontier"),
-          // batched-checkpoint cadence must not change the fixpoint
-          df => Dedup.connectedComponents(df, driverEdgeLimit = 0, checkpointInterval = 3,
-            algorithm = "frontier"),
           df => Dedup.connectedComponentsStar(df))) {
         val got = algo(edges.toDF("id_a", "id_b"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -297,33 +292,14 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("connected components reach fixpoint on a long chain (propagation over diameter)") {
-    // path 0-1-2-...-9: min label must travel 9 hops; driverEdgeLimit=0
-    // + algorithm="frontier" forces the DISTRIBUTED propagation rounds
-    // (the thing this test pins)
-    val chain = Seq.tabulate(9)(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(chain, driverEdgeLimit = 0, algorithm = "frontier")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc.values.toSet === Set(0L), s"all chain nodes label 0, got $cc")
-    // batched cadence (clamped at 4): spans may overshoot the fixpoint
-    // but labels must be unchanged; 16 exercises the clamp
-    val batched = Dedup.connectedComponents(chain, driverEdgeLimit = 0,
-        checkpointInterval = 16, algorithm = "frontier")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(batched === cc, "checkpoint batching must not change labels")
-  }
-
   test("both CC algorithms label self-loop-only nodes identically") {
     val pairs = Seq((7L, 7L), (3L, 1L)).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.connectedComponents(pairs, driverEdgeLimit = 0, algorithm = "frontier")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val star = Dedup.connectedComponentsStar(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prop === Map(1L -> 1L, 3L -> 1L, 7L -> 7L))
-    assert(local === prop, "driver fast path must label self-loop nodes identically")
-    assert(star === prop, "star must label the self-loop node like propagation does")
+    assert(local === Map(1L -> 1L, 3L -> 1L, 7L -> 7L))
+    assert(star === local, "star must label the self-loop node like the driver fast path")
   }
 
   test("updateClusters: incremental fold-in equals full recompute (merges, attachments, novel components)") {
@@ -410,14 +386,6 @@ class DedupSpec extends SparkTestBase {
         assert(got === expected, s"driverEdgeLimit=$limit edges=$edges removed=$removed")
       }
     }
-  }
-
-  test("connectedComponents rejects an unknown algorithm") {
-    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, algorithm = "pregel")
-    }
-    assert(e.getMessage.contains("unknown CC algorithm"))
   }
 
   test("star alternation collapses a long chain in O(log n) rounds") {
@@ -613,9 +581,6 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a", "e" -> "a"))
-    val frontier = Dedup.connectedComponents(pairs, algorithm = "frontier")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(frontier === got, "frontier must agree on string ids")
   }
 
   test("ngram jaccard verification: exact=1.0, near<1, threshold filters") {
@@ -2425,6 +2390,39 @@ class MultimodalSpec extends SparkTestBase {
         spark.catalog.clearCache() // release the persist-mode entries
       }
     assert(persisted === local)
+  }
+
+  test("Materialize.pair: a failed side releases the other side and surfaces every error") {
+    import graft.core.Materialize
+    // every partition holds a row, so every task of a failing side throws
+    def boom(tag: String) = spark.range(0, 8, 1, 2).toDF("id")
+      .select(udf((x: Long) => { if (x >= 0) throw new IllegalStateException(tag); x })
+        .apply(col("id")))
+    val ok = spark.range(0, 1000, 1, 4).toDF("id")
+    def messages(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).toSeq
+    // RDDs holding cached blocks: a side whose every task failed fills
+    // none, so anything new here after a failed pair is the other side's
+    def held(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    // persist mode registers the failed side's cache too; it must go
+    def registered(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for (mode <- Seq("local", "persist")) {
+      spark.conf.set(Materialize.ModeKey, mode)
+      try {
+        for ((a, b) <- Seq((boom("boom-a"), ok), (ok, boom("boom-b")))) {
+          val (before, regBefore) = (held(), registered())
+          intercept[Exception](Materialize.pair(a, b))
+          assert(held() -- before === Set.empty[Int],
+            s"$mode: the successful side's storage must be released")
+          if (mode == "persist") assert(registered() -- regBefore === Set.empty[Int],
+            "persist: no cache entry may outlive a failed pair")
+        }
+        val e = intercept[Exception](Materialize.pair(boom("boom-a"), boom("boom-b")))
+        val all = (e +: e.getSuppressed.toSeq).flatMap(messages).mkString("\n")
+        assert(all.contains("boom-a") && all.contains("boom-b"),
+          s"$mode: both errors must surface, got:\n$all")
+      } finally spark.conf.unset(Materialize.ModeKey)
+    }
   }
 
   test("set-Jaccard caller contract: the debug valve catches non-distinct inputs; production path never pays it") {
